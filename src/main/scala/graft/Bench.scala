@@ -264,7 +264,8 @@ object Bench {
       "1024").toLong << 20
     val layoutAware = sfBytes >= layoutMinBytes &&
       sys.env.getOrElse("SPARK_GRAFT_LAYOUT", "1") == "1"
-    // layout codec: uncompressed decodes ~1.5-2x faster (ScanFloor2 A/B)
+    // layout codec: uncompressed decodes ~1.5-2x faster (BASELINE round
+    // 14, "One lever found and shipped")
     // and the sf10-class layout fits local disk many times over; at the
     // sf100 decade the uncompressed layout (~3x snappy's 15 GB) would
     // flirt with this box's free disk, so big fixtures keep snappy.

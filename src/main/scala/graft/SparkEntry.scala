@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,21 +16,23 @@ object SparkEntry {
 
   import _root_.graft.{queries => qb}
 
-  private def batches = Seq(
-    qb.QTpch.queries, qb.QTpch2.queries, qb.QTpch3.queries, qb.QTpch4.queries, qb.QTpcds.queries, qb.QTpcds2.queries, qb.QTpcds3.queries, qb.QTpcds4.queries, qb.QTpcds5.queries, qb.QTpcds6.queries, qb.QTpcds7.queries, qb.QTpcds8.queries, qb.QTpcds9.queries, qb.QTpcds10.queries, qb.QTpcds11.queries, qb.QTpcds12.queries, qb.QTpcds13.queries, qb.QTpcdsOfficial.queries, qb.QTpcdsOfficial2.queries, qb.QTpcdsOfficial3.queries, qb.QTpcdsOfficial4.queries, qb.QTpcdsOfficial5.queries, qb.QTpcdsOfficial6.queries, qb.QTpcdsOfficial7.queries, qb.QTypes.queries, qb.QRel.queries, qb.QAgg.queries, qb.QWin.queries,
-    qb.QSub.queries, qb.QFunc.queries, qb.QLake.queries, qb.QPipe.queries, qb.QPgShim.queries,
-    qb.QMisc.queries, qb.QClick.queries, qb.QClick2.queries, qb.QClick3.queries, qb.QClick4.queries, qb.QClick5.queries, qb.QClick6.queries, qb.QGeo.queries, qb.QSearch.queries)
+  /** Every query batch, listed once; each declares its queries and
+    * their oracle SQL together. */
+  private lazy val registry = qb.Batch.registry(Seq(
+    qb.QTpch, qb.QTpch2, qb.QTpch3, qb.QTpch4,
+    qb.QTpcds, qb.QTpcds2, qb.QTpcds3, qb.QTpcds4, qb.QTpcds5, qb.QTpcds6,
+    qb.QTpcds7, qb.QTpcds8, qb.QTpcds9, qb.QTpcds10, qb.QTpcds11,
+    qb.QTpcds12, qb.QTpcds13,
+    qb.QTpcdsOfficial, qb.QTpcdsOfficial2, qb.QTpcdsOfficial3,
+    qb.QTpcdsOfficial4, qb.QTpcdsOfficial5, qb.QTpcdsOfficial6,
+    qb.QTpcdsOfficial7,
+    qb.QTypes, qb.QRel, qb.QAgg, qb.QWin, qb.QSub, qb.QFunc, qb.QLake,
+    qb.QPipe, qb.QPgShim, qb.QMisc,
+    qb.QClick, qb.QClick2, qb.QClick3, qb.QClick4, qb.QClick5, qb.QClick6,
+    qb.QGeo, qb.QSearch))
 
-  private def oracleBatches = Seq(
-    qb.QTpch.oracleSql, qb.QTpch2.oracleSql, qb.QTpch3.oracleSql, qb.QTpch4.oracleSql, qb.QTpcds.oracleSql, qb.QTpcds2.oracleSql, qb.QTpcds3.oracleSql, qb.QTpcds4.oracleSql, qb.QTpcds5.oracleSql, qb.QTpcds6.oracleSql, qb.QTpcds7.oracleSql, qb.QTpcds8.oracleSql, qb.QTpcds9.oracleSql, qb.QTpcds10.oracleSql, qb.QTpcds11.oracleSql, qb.QTpcds12.oracleSql, qb.QTpcds13.oracleSql, qb.QTpcdsOfficial.oracleSql, qb.QTpcdsOfficial2.oracleSql, qb.QTpcdsOfficial3.oracleSql, qb.QTpcdsOfficial4.oracleSql, qb.QTpcdsOfficial5.oracleSql, qb.QTpcdsOfficial6.oracleSql, qb.QTypes.oracleSql,
-    qb.QRel.oracleSql, qb.QAgg.oracleSql,
-    qb.QWin.oracleSql, qb.QSub.oracleSql, qb.QFunc.oracleSql,
-    qb.QLake.oracleSql, qb.QPipe.oracleSql, qb.QPgShim.oracleSql,
-    qb.QMisc.oracleSql, qb.QClick.oracleSql, qb.QClick2.oracleSql, qb.QClick3.oracleSql, qb.QClick4.oracleSql, qb.QClick5.oracleSql, qb.QClick6.oracleSql, qb.QGeo.oracleSql, qb.QSearch.oracleSql)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    batches.reduce(_ ++ _)
-
-  def oracleSql: Map[String, String] =
-    oracleBatches.reduce(_ ++ _)
+  lazy val oracleSql: Map[String, String] = registry.oracleSql
 }

@@ -70,16 +70,18 @@ object Tables {
     val df = Option(overlay.get(s"$sfDir/$name"))
       .map(t => spark.table(s"`$t`"))
       .getOrElse(cachedRead(spark, s"$sfDir/$name.parquet"))
-    // events.ts is parquet TIMESTAMP(NANOS) — Spark has no nanosecond
-    // timestamp type; with spark.sql.legacy.parquet.nanosAsLong=true it
-    // arrives as Long nanos, which we floor to microseconds (integer DIV —
-    // double division would lose precision above 2^53).
+    // events.ts as parquet TIMESTAMP(NANOS), which outside input can
+    // carry — Spark has no nanosecond timestamp type; with
+    // spark.sql.legacy.parquet.nanosAsLong=true it arrives as Long nanos,
+    // which we floor to microseconds (integer DIV — double division would
+    // lose precision above 2^53).
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else if (name == "events" &&
       df.schema("ts").dataType != org.apache.spark.sql.types.TimestampType)
-      // tolerate re-written copies of the fixture (TIMESTAMP_NTZ etc.);
-      // the session timezone is pinned to UTC so the instant is unchanged
+      // the shipped fixtures store TIMESTAMP(MICROS, isAdjustedToUTC=
+      // false), read as TIMESTAMP_NTZ (FIXTURES.md); the session timezone
+      // is pinned to UTC so the instant is unchanged
       df.withColumn("ts", col("ts").cast("timestamp"))
     else df
   }

@@ -356,8 +356,9 @@ object BigWindow {
     // the per-(key, block) window sort degrades toward the serial skew
     // this layout exists to avoid; orderCols-only ranging spreads every
     // key across all blocks (interleaved A/B at sf10: 6.27 vs 6.95 and
-    // 9.57 vs 13.12 s best-of — consistently faster, FrameStatsDiff
-    // 600K-row real-data diff exact)
+    // 9.57 vs 13.12 s best-of — consistently faster; a 600K-row
+    // real-data diff against the classic window was exact — BASELINE
+    // "Round 8: the window family")
     val rangeCols = orderCols.map(col)
     val blocked = trackedCache(df
       .repartitionByRange(n, rangeCols: _*)

@@ -142,8 +142,9 @@ object Dedup {
     val spark = df.sparkSession
     val mode = spark.conf
       .get("spark.graft.minhash.clusteredVerify", "auto")
-    // Dispatch, settled by measurement across two decades
-    // (tools/MinhashLedger):
+    // Dispatch, settled by measurement across two decades (BASELINE
+    // "Round 10: q_dedup_minhash ledgered" and round 12's minhash
+    // section):
     //  - sf10 (500k docs / 30.8M surviving pairs): pair-join 44.0 s vs
     //    clustered 63.2 s — the join path is whole-stage-codegen'd end
     //    to end and its array shuffle compresses well, so it wins while
@@ -163,9 +164,9 @@ object Dedup {
     else exactVerifyJoin(plan.est, plan.sh, threshold, plan.big)
   }
 
-  /** The minhash pipeline's staged internals — one object so the
-    * benchmark ledger (tools/MinhashLedger) times the REAL stages and
-    * the auto-dispatch above composes them without recomputation.
+  /** The minhash pipeline's staged internals — one object so a stage
+    * ledger (BASELINE round 10) can time the REAL stages and the
+    * auto-dispatch above composes them without recomputation.
     * `sh`/`sig` branch off one cached signature table; `est` is the
     * post-banding, post-estimate candidate list. */
   private[graft] final case class MinhashPlan(sig: DataFrame,
@@ -841,11 +842,6 @@ object Dedup {
     // O(distinct ids per partition). Guarded like every broadcast here.
     val nNodes = labels.count() // labels are checkpointed; count is cheap
     val bcastLabels = nNodes * 48L < Runtime.getRuntime.maxMemory / 24
-    // operational round timing (spark.graft.components.verbose=true):
-    // the scale ledger attributes the label-prop share of the clustered
-    // verify to ROUNDS × per-round edge scans — this prints both terms
-    val verbose = pairs.sparkSession.conf
-      .get("spark.graft.components.verbose", "false") == "true"
     var converged = false
     var it = 0
     while (!converged) {
@@ -853,7 +849,6 @@ object Dedup {
         s"Dedup.components: no convergence after $maxIters rounds — " +
           "the pair graph has a longer diameter than a duplicate " +
           "cluster should; inspect the pair generator's threshold")
-      val t0 = System.nanoTime()
       // NOTE pointer jumping (lbl := lbl(lbl) per round) was measured
       // at sf100 and NETS ZERO here: it cut rounds 10 → 8 but each
       // round pays an extra node-sized checkpoint+join (169.6 s vs
@@ -878,9 +873,6 @@ object Dedup {
       labels = next
       converged = changed == 0L
       it += 1
-      if (verbose)
-        println(f"[components] round $it%2d  ${(System.nanoTime() - t0) / 1e9}%7.2f s" +
-          (if (converged) "  (converged)" else ""))
     }
     labels.select(col("id").as(idCol), col("lbl").as(out))
   }

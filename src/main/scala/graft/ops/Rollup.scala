@@ -105,11 +105,12 @@ object Rollup {
       .select((dims.map(col) ++ aggs.map(a => col(a.name))): _*))
   }
 
-  /** Size-adaptive ROLLUP: the RollupAB sweep measured the crossover in
-    * both directions — native Expand wins at toy scale (sf0.1: the
-    * per-level re-agg JOBS cost more than Expand saves on 600k rows,
-    * +0.07 s) and loses once the fact dwarfs the job cost (sf10:
-    * rollup 2.0 → 0.7 s, cube −57%). This dispatch reads the input's
+  /** Size-adaptive ROLLUP: an A/B sweep (BASELINE "Round-8 addendum",
+    * commit eae57ed) measured the crossover in both directions —
+    * native Expand wins at toy scale (sf0.1: the per-level re-agg JOBS
+    * cost more than Expand saves on 600k rows, +0.07 s) and loses once
+    * the fact dwarfs the job cost (sf10: rollup 2.0 → 0.7 s, cube
+    * −57%). This dispatch reads the input's
     * optimizer size estimate and picks the regime, so ONE declaration
     * is right at every scale — the decision a cost-based planner would
     * make, made at the operator layer because Catalyst keeps Expand

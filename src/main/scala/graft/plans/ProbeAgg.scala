@@ -71,13 +71,13 @@ object ProbeAgg {
   // construction, not by TTL; probes not fully file-backed are never
   // cached. Disable (the bench's explicit cold arm):
   // SPARK_GRAFT_PROBE_CACHE=0 or spark.graft.probe.cache=0; retained
-  // bytes capped by ..._MB (default 2048), LRU-evicted.
+  // bytes capped at ProbeCacheBudgetBytes (2 GiB), LRU-evicted.
   private def probeCacheEnabled: Boolean =
     !sys.props.get("spark.graft.probe.cache")
       .orElse(sys.env.get("SPARK_GRAFT_PROBE_CACHE")).contains("0")
 
   /** Measurement-harness posture pin: the production default is ON
-    * (r17), but BENCH_rN and the tools/ ledgers keep reporting the
+    * (r17), but BENCH_rN and `graft.tools.Ab` keep reporting the
     * COLD (rebuild-every-rep) arm unless a session explicitly opts
     * into warm via SPARK_GRAFT_PROBE_CACHE=1 — round-over-round
     * comparability and honest rebuild cost. Call from a harness main
@@ -86,11 +86,7 @@ object ProbeAgg {
     if (!sys.env.contains("SPARK_GRAFT_PROBE_CACHE") &&
         !sys.props.contains("spark.graft.probe.cache"))
       sys.props("spark.graft.probe.cache") = "0"
-  private def probeCacheBudgetBytes: Long =
-    sys.props.get("spark.graft.probe.cache.mb")
-      .orElse(sys.env.get("SPARK_GRAFT_PROBE_CACHE_MB"))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(2048L) * (1L << 20)
+  private val ProbeCacheBudgetBytes = 2048L << 20
 
   private val packLru =
     new java.util.LinkedHashMap[String, PackedMap](16, 0.75f, true)
@@ -154,7 +150,7 @@ object ProbeAgg {
                 packLru.put(k, pm)
                 packLruBytes += pm.entries.toLong * 16
                 val it = packLru.entrySet().iterator()
-                while (packLruBytes > probeCacheBudgetBytes &&
+                while (packLruBytes > ProbeCacheBudgetBytes &&
                     packLru.size() > 1 && it.hasNext) {
                   val e = it.next()
                   if (e.getKey != k) {
@@ -757,9 +753,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
     var gColBuf: Array[Long] = new Array[Long](0)
     val localMaps = ProbeAgg.forceMaps(maps)
     val strTargets = strFs.map(f => UTF8String.fromString(f._2))
-    val dbg = System.getenv("GRAFT_PROBEAGG_DEBUG") == "1"
-    var tDecode = 0L; var tFilter = 0L; var tProbe = 0L; var tAcc = 0L
-    var nRows = 0L
     var cols: Array[Array[Double]] = Array.fill(nSlots)(new Array[Double](0))
     var masks: Array[Array[Boolean]] = Array.fill(nSlots)(new Array[Boolean](0))
     var keyBufs: Array[Array[Long]] = Array.fill(nProbes)(new Array[Long](0))
@@ -780,8 +773,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
           vals = Array.fill(nProbes)(new Array[Long](n))
           if (gColOrd >= 0) gColBuf = new Array[Long](n)
         }
-        nRows += n
-        var t0 = if (dbg) System.nanoTime() else 0L
         var s = 0
         while (s < nSlots) {
           decodeNum(batch.column(numOrds(s)), slotKinds(s), n, cols(s),
@@ -797,7 +788,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
         // Groups.idOf — a null GROUP key must fail loudly, not drop
         if (gColOrd >= 0)
           decodeKey(batch.column(gColOrd), gColLong, n, gColBuf)
-        if (dbg) { val t = System.nanoTime(); tDecode += t - t0; t0 = t }
         java.util.Arrays.fill(keep, 0, n, true)
         // numeric filters — same NULL/NaN semantics as LowCardAgg
         var f = 0
@@ -864,7 +854,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
           }
           f += 1
         }
-        if (dbg) { val t = System.nanoTime(); tFilter += t - t0; t0 = t }
         // probes: miss (or null key) drops the row
         p = 0
         while (p < nProbes) {
@@ -890,7 +879,6 @@ final case class ProbePreAggExec(factCols: Seq[String],
             i += 1
           }
         }
-        if (dbg) { val t = System.nanoTime(); tProbe += t - t0; t0 = t }
         val gvals =
           if (groupIdx >= 0) vals(groupIdx)
           else if (gColOrd >= 0) gColBuf
@@ -968,12 +956,8 @@ final case class ProbePreAggExec(factCols: Seq[String],
           }
           s += 1
         }
-        if (dbg) { val t = System.nanoTime(); tAcc += t - t0 }
       }
     }
-    if (dbg) println(f"[probeagg-dbg] rows=$nRows groups=${groups.n} " +
-      f"decode=${tDecode / 1e6}%.0fms filter=${tFilter / 1e6}%.0fms " +
-      f"probe=${tProbe / 1e6}%.0fms acc=${tAcc / 1e6}%.0fms")
     groups.rows(nSums)
   }
 

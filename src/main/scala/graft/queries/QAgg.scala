@@ -15,7 +15,7 @@ import Q._
   * All are Spark built-ins (partial/final split + map-side combine come
   * from the HashAggregate physical operator for free).
   */
-object QAgg {
+object QAgg extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     // stats aggregates derived from kernel power sums (n, Σx, Σx², Σy,
@@ -269,7 +269,7 @@ object QAgg {
           col("l_returnflag"), col("l_linestatus")))
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_agg_stats" ->
       """SELECT l_returnflag,
         |  round(stddev_samp(l_quantity), 6) AS sd_samp,

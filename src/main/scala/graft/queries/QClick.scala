@@ -13,7 +13,7 @@ import Q._
   * OFFSET, NULLS ordering, interval arithmetic, and the deterministic
   * mode() rewrite.
   */
-object QClick {
+object QClick extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     "q_click_overview" -> { (s, dir) =>
@@ -109,7 +109,7 @@ object QClick {
         .orderBy("l_returnflag")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_click_overview" ->
       """SELECT count(*) AS n, count(DISTINCT user_id) AS users,
         |  round(avg(value), 6) AS avg_value,

@@ -29,7 +29,7 @@ import Q._
   * across engines, so every LIMIT here adds unique(-enough) tiebreak keys
   * — same tolerance the reference applies when differential-testing.
   */
-object QClick2 {
+object QClick2 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -141,5 +141,5 @@ object QClick2 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -16,7 +16,7 @@ import Q._
   * floor()-based bucketing instead of integer `//` division (DuckDB
   * spells it `//`, Spark `DIV`); deterministic tiebreaks on every LIMIT.
   */
-object QClick3 {
+object QClick3 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -81,5 +81,5 @@ object QClick3 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -17,7 +17,7 @@ import Q._
   * Same SQL text runs on both engines; every LIMIT carries a unique
   * tiebreak so the ordered-hash gate is deterministic.
   */
-object QClick4 {
+object QClick4 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -100,5 +100,5 @@ object QClick4 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

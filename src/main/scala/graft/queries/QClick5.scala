@@ -10,7 +10,7 @@ import Q._
   *  - q_click_title_views   Q38: date-windowed flag-filtered group
   *  - q_click_hash_window   Q41: IN-list + point filter + paged group
   */
-object QClick5 {
+object QClick5 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -58,5 +58,5 @@ object QClick5 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -27,7 +27,7 @@ import Q._
   * model→the props payload digits, URLs→synthesized from user_id (the
   * operator under test is the plan shape, not the data).
   */
-object QClick6 {
+object QClick6 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -135,5 +135,5 @@ object QClick6 {
     shared.map { case (n, q) => n -> sql(q) } +
       ("q_click_group_limit" -> sql(qGroupLimit))
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -13,7 +13,7 @@ import Q._
   * reference itself ships C++ shims for initcap, duckdb_pglake_extension
   * .cpp:328-354) are covered by ScalaTest specs instead of the oracle.
   */
-object QFunc {
+object QFunc extends Batch {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").filter(col("doc_id") < 200)
@@ -239,7 +239,7 @@ object QFunc {
         .orderBy("doc_id")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_fn_string2" ->
       """SELECT doc_id,
         |  translate(source, 'srcx', 'xyzq') AS tr,

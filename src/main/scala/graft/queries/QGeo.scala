@@ -15,7 +15,7 @@ import Q._
   * Points are derived from supplier keys with +0.5 offsets so nothing
   * lands on a zone boundary (st_contains excludes boundaries).
   */
-object QGeo {
+object QGeo extends Batch {
 
   private val zoneDefs = Seq(
     // name, x1, y1, x2, y2 (integer-cornered rectangles)
@@ -209,7 +209,7 @@ object QGeo {
         |      FROM supplier WHERE s_suppkey < 150) a) b) c
         |ORDER BY s_suppkey""".stripMargin)
 
-  val oracleSql: Map[String, String] = setopOracle ++ holesOracle ++ Map(
+  override val oracleSql: Map[String, String] = setopOracle ++ holesOracle ++ Map(
     "q_geo_zones" -> {
       val zoneCase = zoneDefs.map { case (z, x1, y1, x2, y2) =>
         s"WHEN x > $x1 AND x < $x2 AND y > $y1 AND y < $y2 THEN '$z'"

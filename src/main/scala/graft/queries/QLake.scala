@@ -17,7 +17,7 @@ import Q._
   * right rows (the reference tests the same way:
   * test_writable_table_{insert,update,delete,vacuum}.py).
   */
-object QLake {
+object QLake extends Batch {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"qlake_$name").toString + "/t"
@@ -474,7 +474,7 @@ object QLake {
         .orderBy("o_orderpriority")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_lake_insert" ->
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
         |  count(*) AS n

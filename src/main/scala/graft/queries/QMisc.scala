@@ -9,7 +9,7 @@ import Q._
   * SURVEY §2.8) and the event-time windowed rollup (batch execution of
   * the streaming plan — same Catalyst operators).
   */
-object QMisc {
+object QMisc extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     "q_fn_map" -> { (s, dir) =>
@@ -49,7 +49,7 @@ object QMisc {
         .transform(Q.ordered(_, col("user_id"), col("session_start")))
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_fn_map" ->
       """SELECT n_nationkey,
         |  map(['name','region'],[n_name, CAST(n_regionkey AS VARCHAR)])['name'][1]

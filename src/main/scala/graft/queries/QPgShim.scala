@@ -9,7 +9,7 @@ import Q._
   * portable DuckDB SQL, mirroring how the reference pins its shims with
   * differential tests (test_expression_pushdown.py).
   */
-object QPgShim {
+object QPgShim extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -65,7 +65,7 @@ object QPgShim {
         |  to_char(ts, 'US') AS micros
         |FROM events WHERE event_id % 37 = 0 ORDER BY event_id""".stripMargin))
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_pg_text" ->
       """SELECT doc_id,
         |  substring(text, greatest(-3, 1),

@@ -11,7 +11,7 @@ import Q._
   * LSH/simhash/ANN are rows-only here and verified against exact
   * baselines in PipelineSpec.
   */
-object QPipe {
+object QPipe extends Batch {
 
   /** Shared hyperplane tables for the gate ANN query (dim 64, 4 planes,
     * 4 tables) — the oracle SQL embeds the same integers as literals. */
@@ -19,19 +19,20 @@ object QPipe {
 
   /** Plane sets for the embed near-dup gate query (dim 64, 6 bits, 8
     * tables, double-sided 1-bit multiprobe): recall on the fixture's 60
-    * qualifying pairs is 1.0 with margin (tools/EmbedProfile sweep:
-    * 6-bit/8-table misses 0, 8-bit/8-table misses 4 — the run is
-    * deterministic), so the LSH path's output EQUALS the brute-force
+    * qualifying pairs is 1.0 with margin (a plane-set sweep in commit
+    * 6d58f14: 6-bit/8-table misses 0, 8-bit/8-table misses 4 — the run
+    * is deterministic), so the LSH path's output EQUALS the brute-force
     * all-pairs oracle while shuffling only (table, bucket, id). */
   private val embedTables = Similarity.intHyperplaneTables(64, 6, 8)
 
   /** BPE merge list for the q_text_bpe gate — trained once on the
-    * sf0.01 documents table (tools/BpeTrain, 32 merges, deterministic)
-    * and hardcoded like any shipped tokenizer artifact: the gate applies
-    * the same fixed tokenizer at every scale. The oracle SQL replays the
+    * sf0.01 documents table (`Bpe.train`, 32 merges, deterministic;
+    * BpeSpec re-derives this list from the fixture) and hardcoded like
+    * any shipped tokenizer artifact: the gate applies the same fixed
+    * tokenizer at every scale. The oracle SQL replays the
     * IDENTICAL algorithm as a chain of replace() calls (see
     * [[graft.ops.Bpe]] for the literal-replace equivalence proof). */
-  private val bpeMerges: Seq[(String, String)] = Seq(
+  private[graft] val bpeMerges: Seq[(String, String)] = Seq(
     ("e", "r"), ("i", "n"), ("o", "w"), ("o", "r"), ("s", "t"),
     ("m", "er"), ("a", "t"), ("l", "u"), ("a", "r"), ("p", "ar"),
     ("j", "o"), ("jo", "in"), ("a", "s"), ("as", "h"), ("h", "ash"),
@@ -661,7 +662,7 @@ object QPipe {
         .orderBy("lang")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_funnel" ->
       """WITH v AS (
         |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t_view

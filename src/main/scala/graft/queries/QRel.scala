@@ -12,7 +12,7 @@ import Q._
   * (FQ tier), and set operations
   * (tests/pytests/test_set_operation_pushdown.py:6-23).
   */
-object QRel {
+object QRel extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     // projection + compound predicate (AND/OR/NOT/IN/BETWEEN); all pushed
@@ -161,7 +161,7 @@ object QRel {
       a.except(b).orderBy("nk")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_proj_filter" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag, l_shipdate
         |FROM lineitem

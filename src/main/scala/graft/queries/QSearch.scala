@@ -10,7 +10,7 @@ import graft.ops.Bm25
   * query, shuffle-free scan path) — both replayed term-for-term by the
   * DuckDB oracle so scores AND ranking order verify differentially.
   */
-object QSearch {
+object QSearch extends Batch {
 
   /** Fixed query relation for the gates: tokens drawn from the fixture
     * vocabulary so matches are dense enough to exercise tf/dl
@@ -130,7 +130,7 @@ object QSearch {
        |  FROM scored)
        |$whereRank""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_text_bm25" -> bm25Sql(
       "(1, 'spark hash join'), (2, 'customer query filter'), " +
         "(3, 'window agg stream vector')",

@@ -12,7 +12,7 @@ import Q._
   * tests/pytests/test_cte_subquery_pushdown.py). In Spark these are native
   * SQL — Catalyst decorrelates (RewriteCorrelatedScalarSubquery).
   */
-object QSub {
+object QSub extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -81,8 +81,9 @@ object QSub {
       .select("c_custkey", "c_name")
     // Deliberately the native partial HashAggregate: the ProbeAgg
     // groupByCol kernel was built and MEASURED for this 1.5M-group
-    // shape (CteProbe at sf10: kernel agg 1.07 s ≡ native 1.07 s; full
-    // query kernel 2.09–2.38 vs native 1.99 in-protocol) — at ~400K
+    // shape (BASELINE "Round 8 continued", sf10: kernel agg 1.07 s ≡
+    // native 1.07 s; full query kernel 2.09–2.38 vs native 1.99
+    // in-protocol) — at ~400K
     // groups/task the hash probe, not the row pipeline, dominates both
     // paths, and the query's floor is the exchange + final aggregate of
     // ~13M low-reduction partials (ledger in BASELINE.md). SHUFFLE_HASH
@@ -110,7 +111,7 @@ object QSub {
     "q_subq_derived" -> sql(lateralish))
 
   // Same dialect for both engines — pass the identical SQL to DuckDB.
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_cte" -> cte,
     "q_subq_scalar" -> scalarSub,
     "q_subq_in" -> inSub,

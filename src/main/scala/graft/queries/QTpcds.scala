@@ -10,12 +10,16 @@ import Q._
   * (Q38), CASE-bucketed scans (Q9), rank-within-category top-N,
   * moving-window averages, and ntile deciles. Same SQL to both engines.
   */
-object QTpcds {
+object QTpcds extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
     s.sql(q)
   }
+
+  /** Lineitem scan size past which qds_yoy's fallback arm aggregates
+    * below the join (the sf100 regime; see the arm below). */
+  private val YoyAggBelowJoinBytes = BigInt(4L << 30)
 
   // Spark-side plan for qds_yoy: Spark inlines (does not materialize)
   // WITH-CTEs, so the oracle's self-join form would execute the 4-table
@@ -49,8 +53,9 @@ object QTpcds {
         withinReduceBound(c.select("c_custkey", "c_nationkey"))) {
       // ProbeAgg kernel: probe VALUE = nationkey·10⁴ + order year, so
       // the (nation, year) revenue matrix (175 groups) accumulates in
-      // the fact's scan pass — sf10: 4.92 → 0.96 s (tools/ProbeAggAB);
-      // the lag window then runs on 175 rows
+      // the fact's scan pass — sf10: 4.92 → 0.96 s (BASELINE round 8,
+      // "the ProbeAgg columnar join+aggregate kernel"); the lag window
+      // then runs on 175 rows
       val cN = c.join(broadcast(t("nation")
           .select("n_nationkey", "n_name")),
           col("c_nationkey") === col("n_nationkey"))
@@ -90,20 +95,20 @@ object QTpcds {
         // plan's and the per-construction optimizer run is saved — the
         // last production-path optimizedPlan.stats probe
         t("lineitem").queryExecution.analyzed.stats.sizeInBytes >
-          BigInt(s.conf.get("spark.graft.yoy.aggBelowJoinBytes",
-            (4L << 30).toString).toLong)) {
+          YoyAggBelowJoinBytes) {
       // beyond the probe-map bound, no co-located layout, and a fact
       // too big for the shuffle to stay in memory (the sf100 headline
-      // regime — the threshold is the scan-stats size, default 4 GiB):
+      // regime — the threshold is the scan-stats size, 4 GiB):
       // aggregate BELOW the join. Summing revenue per orderkey first
       // rides the map-side partial aggregation (lineitem rows for an
       // order co-locate in files, so ~4 items collapse to 1 before the
       // exchange) — the big shuffle carries ~N_orders narrow (key, rev)
       // rows instead of ~4N wide fact rows. Measured sf100 solo:
-      // 106.5 → 45.6 s (tools/QueryOne). The size dial keeps smaller
-      // fixtures on the join form the oracle gate exercises; in
-      // practice the kernel arm owns everything within the probe-map
-      // bound anyway (sf10 included — tools/YoyProbe). Sum-of-sums
+      // 106.5 → 45.6 s (BASELINE "Round-10 follow-up: the qds_yoy sf100
+      // arm"). The size bound keeps smaller fixtures on the join form
+      // the oracle gate exercises; in practice the kernel arm owns
+      // everything within the probe-map bound anyway (sf10 included,
+      // same section). Sum-of-sums
       // re-associates float addition, so a rounded cent can move where
       // a .xx5 boundary flips (one group at sf0.01; PlanSpec pins
       // cent-exactness — the finest-first-rollup deviation class); the
@@ -190,9 +195,10 @@ object QTpcds {
   // Q5/Q77 shape: per-channel revenue union → rollup with grand total.
   // Channels are proxied by order priority classes. The FROM clause
   // leads with the FACT (lineitem ⋈ orders first, dims after):
-  // tools/ChannelRollupAB measured both left-deep orders at
-  // sf0.1/sf1/sf10 and fact-first won every scale (0.67 vs 0.93 /
-  // 1.27 vs 1.71 / 4.25 vs 5.50 s median) — the dims-first build-up
+  // an A/B (BASELINE "qds_channel_rollup join order") measured both
+  // left-deep orders at sf0.1/sf1/sf10 and fact-first won every scale
+  // (0.67 vs 0.93 / 1.27 vs 1.71 / 4.25 vs 5.50 s median) — the
+  // dims-first build-up
   // shuffles orders on custkey AND its join output on orderkey, while
   // fact-first pays one orderkey co-shuffle and then broadcasts the
   // nation-filtered customer side (AQE keeps choosing that even with a
@@ -480,8 +486,8 @@ object QTpcds {
       if (withinReduceBound(ocBound) && withinReduceBound(cBound)) {
         // ProbeAgg kernel: (channel, nation) dictionary-coded into the
         // probe VALUE (6 combos), the fact's batches probe once and
-        // accumulate the 6-group sums — sf10: 3.10 → 0.90 s
-        // (tools/ProbeAggAB); decode is a 6-row broadcast join
+        // accumulate the 6-group sums — sf10: 3.10 → 0.90 s (BASELINE
+        // round 8, the ProbeAgg kernel); decode is a 6-row broadcast join
         val cN = c.join(broadcast(n3),
             col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey"), col("n_name").as("nation"))
@@ -543,5 +549,5 @@ object QTpcds {
       ("qds_yoy" -> qYoySpark) +
       ("qds_top_per_group" -> qTopPerGroupSpark) +
       ("qds_channel_rollup" -> qChannelRollupSpark)
-  val oracleSql: Map[String, String] = all
+  override val oracleSql: Map[String, String] = all
 }

@@ -32,7 +32,7 @@ import Q._
   * Shared-SQL (Spark ∩ DuckDB); oracle replays the text. BIGINT cents
   * + cross-multiplication keep every compare exact.
   */
-object QTpcds10 {
+object QTpcds10 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -193,5 +193,5 @@ object QTpcds10 {
   val queries: Map[String, QueryFn] =
     texts.map { case (k, v) => k -> sql(v) }
 
-  val oracleSql: Map[String, String] = texts
+  override val oracleSql: Map[String, String] = texts
 }

@@ -41,7 +41,7 @@ import Q._
   * IEEE quotient of two exact integers, which both engines round
   * identically.
   */
-object QTpcds11 {
+object QTpcds11 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -322,5 +322,5 @@ object QTpcds11 {
   val queries: Map[String, QueryFn] =
     texts.map { case (k, v) => k -> sql(v) }
 
-  val oracleSql: Map[String, String] = texts
+  override val oracleSql: Map[String, String] = texts
 }

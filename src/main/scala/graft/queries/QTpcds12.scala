@@ -33,7 +33,7 @@ import Q._
   * Averages and variances travel as integer components (Σ, Σx², n) in
   * BIGINT, deviation compares cross-multiply — exact by construction.
   */
-object QTpcds12 {
+object QTpcds12 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -225,5 +225,5 @@ object QTpcds12 {
   val queries: Map[String, QueryFn] =
     texts.map { case (k, v) => k -> sql(v) }
 
-  val oracleSql: Map[String, String] = texts
+  override val oracleSql: Map[String, String] = texts
 }

@@ -22,7 +22,7 @@ import Q._
   * Shared-SQL (Spark ∩ DuckDB); the oracle replays the exact text;
   * money in BIGINT cents.
   */
-object QTpcds13 {
+object QTpcds13 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -107,5 +107,5 @@ object QTpcds13 {
   val queries: Map[String, QueryFn] =
     texts.map { case (k, v) => k -> sql(v) }
 
-  val oracleSql: Map[String, String] = texts
+  override val oracleSql: Map[String, String] = texts
 }

@@ -31,7 +31,7 @@ import Q._
   * Money snaps to integer cents before any comparison or output so no
   * float accumulation-order drift can cross a rounding boundary.
   */
-object QTpcds2 {
+object QTpcds2 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -191,7 +191,7 @@ object QTpcds2 {
           |WHERE tok <> ''
           |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin))
 
-  val oracleSql: Map[String, String] = shared ++ Map(
+  override val oracleSql: Map[String, String] = shared ++ Map(
     "qds_ship_latency" ->
       """SELECT CASE WHEN days <= 30 THEN 'a:0-30'
         |            WHEN days <= 60 THEN 'b:31-60'

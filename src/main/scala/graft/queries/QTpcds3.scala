@@ -39,7 +39,7 @@ import Q._
   * CTEs, so the textbook self-join would run the heavy subtree twice
   * (same rewrite as qds_yoy); the oracle keeps the self-join form.
   */
-object QTpcds3 {
+object QTpcds3 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -329,7 +329,7 @@ object QTpcds3 {
       "qds_wide_multiyear" -> sql(qWideMultiyearSpark),
       "qds_cov" -> sql(qCovSpark))
 
-  val oracleSql: Map[String, String] = shared ++ Map(
+  override val oracleSql: Map[String, String] = shared ++ Map(
     "qds_wide_multiyear" -> qWideMultiyearOracle,
     "qds_cov" -> qCovOracle)
 }

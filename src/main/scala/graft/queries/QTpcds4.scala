@@ -22,7 +22,7 @@ import Q._
   * overflow BIGINT at larger scale factors) and integer cents
   * elsewhere; every ratio comparison is cross-multiplied.
   */
-object QTpcds4 {
+object QTpcds4 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -177,5 +177,5 @@ object QTpcds4 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

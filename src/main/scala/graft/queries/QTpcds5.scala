@@ -21,7 +21,7 @@ import Q._
   * All ratio tests are cross-multiplied integers; cumulative sums are
   * per-row-snapped integer cents (the qds_cumulative lesson).
   */
-object QTpcds5 {
+object QTpcds5 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -133,5 +133,5 @@ object QTpcds5 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

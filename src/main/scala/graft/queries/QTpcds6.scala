@@ -14,7 +14,7 @@ import Q._
   *  - qds_best_worst       Q44: top-k ascending UNION top-k descending
   *                         performance ranks joined back to names
   */
-object QTpcds6 {
+object QTpcds6 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -103,5 +103,5 @@ object QTpcds6 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -14,7 +14,7 @@ import Q._
   *  - qds_substr_semi     Q8: substring-set semi-join (zip-prefix
   *                        shape) against a derived frequent set
   */
-object QTpcds7 {
+object QTpcds7 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -99,5 +99,5 @@ object QTpcds7 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -33,7 +33,7 @@ import Q._
   * exact text — divergence anywhere in the plan surfaces as a hash
   * mismatch.
   */
-object QTpcds8 {
+object QTpcds8 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -214,5 +214,5 @@ object QTpcds8 {
   val queries: Map[String, QueryFn] =
     shared.map { case (n, q) => n -> sql(q) }
 
-  val oracleSql: Map[String, String] = shared
+  override val oracleSql: Map[String, String] = shared
 }

@@ -39,7 +39,7 @@ import Q._
   * exact text. Money stays in BIGINT cents everywhere, ratio compares
   * cross-multiply — no float drift can exist by construction.
   */
-object QTpcds9 {
+object QTpcds9 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -264,5 +264,5 @@ object QTpcds9 {
   val queries: Map[String, QueryFn] =
     texts.map { case (k, v) => k -> sql(v) }
 
-  val oracleSql: Map[String, String] = texts
+  override val oracleSql: Map[String, String] = texts
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * versioned tmp dir and reused; all columns derive from row ids via
   * integer mixing, so regeneration is bit-identical.
   */
-object QTpcdsOfficial {
+object QTpcdsOfficial extends Batch {
 
   // bump when the generator changes — the dir is content-versioned
   private val Version = "v15"
@@ -1241,7 +1241,7 @@ limit 100"""
     texts.keys.map(n => n -> ((s: SparkSession, _: String) =>
       runOfficial(s, texts(n), renames.get(n))): (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> wrapOracle(text, renames.get(name))
   }
 }

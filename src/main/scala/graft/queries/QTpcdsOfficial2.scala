@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   but BIGINT in Spark — the ORACLE wrapper casts those columns back
   *   to BIGINT ([[QTpcdsOfficial.wrapOracle]]); values are identical.
   */
-object QTpcdsOfficial2 {
+object QTpcdsOfficial2 extends Batch {
 
   private val q1 = """
 with customer_total_return as
@@ -816,7 +816,7 @@ limit 100"""
       QTpcdsOfficial.runOfficial(s, texts(n), renames.get(n)))
       : (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> QTpcdsOfficial.wrapOracle(text, renames.get(name),
       casts.getOrElse(name, Map.empty))
   }

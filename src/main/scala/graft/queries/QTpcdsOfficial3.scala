@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ORACLE wrapper; every LIMIT is cut on a unique ordering chain or the
   * result is smaller than the limit.
   */
-object QTpcdsOfficial3 {
+object QTpcdsOfficial3 extends Batch {
 
   private val q16 = """
 select count(distinct cs_order_number) as "order count",
@@ -560,7 +560,7 @@ limit 100"""
       QTpcdsOfficial.runOfficial(s, texts(n), renames.get(n)))
       : (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> QTpcdsOfficial.wrapOracle(text, renames.get(name),
       casts.getOrElse(name, Map.empty))
   }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * chain where null and non-null rows never interleave at the boundary
   * (the lochierarchy level separates them first).
   */
-object QTpcdsOfficial4 {
+object QTpcdsOfficial4 extends Batch {
 
   private val q6 = """
 select a.ca_state state, count(*) cnt
@@ -540,7 +540,7 @@ limit 100"""
       QTpcdsOfficial.runOfficial(s, texts(n), renames.get(n)))
       : (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> QTpcdsOfficial.wrapOracle(text, renames.get(name),
       casts.getOrElse(name, Map.empty))
   }

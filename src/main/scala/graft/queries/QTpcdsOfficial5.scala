@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.col
   * difference onto the same 4-decimal grid (`sparkCasts` mirrors the
   * oracle cast engine-side; the official text runs unmodified).
   */
-object QTpcdsOfficial5 {
+object QTpcdsOfficial5 extends Batch {
 
   private val q8 = """
 select s_store_name, sum(ss_net_profit)
@@ -365,7 +365,7 @@ limit 100"""
         .getOrElse(df)
     }): (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> QTpcdsOfficial.wrapOracle(text, renameOf(name),
       casts.getOrElse(name, Map.empty))
   }

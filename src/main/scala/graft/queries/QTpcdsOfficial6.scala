@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.col
   * accumulation order differs between engines (and across Spark
   * partitionings).
   */
-object QTpcdsOfficial6 {
+object QTpcdsOfficial6 extends Batch {
 
   private val q4 = """
 with year_total as (
@@ -775,7 +775,7 @@ limit 100"""
         .getOrElse(df)
     }): (String, QueryFn)).toMap
 
-  val oracleSql: Map[String, String] = texts.map { case (name, text) =>
+  override val oracleSql: Map[String, String] = texts.map { case (name, text) =>
     name -> QTpcdsOfficial.wrapOracle(text, renames.get(name),
       casts.getOrElse(name, Map.empty))
   }

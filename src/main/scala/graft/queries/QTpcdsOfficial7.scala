@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fixture: 96 oracle-exact gates (95 ids) + 6 rows-only entries here
   * (5 ids, Q39 contributing two statements).
   */
-object QTpcdsOfficial7 {
+object QTpcdsOfficial7 extends Batch {
 
   private val q14a = """
 with cross_items as

@@ -11,7 +11,7 @@ import Q._
   * EXCLUDE frames — the oracle side uses DuckDB's native EXCLUDE, pinning
   * our rewrite to the real semantics).
   */
-object QTpch2 {
+object QTpch2 extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     // Q4-shape: order priority counting via EXISTS
@@ -158,7 +158,7 @@ object QTpch2 {
         .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q4_order_priority" ->
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders

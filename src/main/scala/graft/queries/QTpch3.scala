@@ -6,7 +6,7 @@ import Q._
   * the trimmed fixture schema (no partsupp: Q9's supply cost uses the
   * part retail price as the cost proxy). Same SQL to both engines.
   */
-object QTpch3 {
+object QTpch3 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -70,7 +70,7 @@ object QTpch3 {
     "q8_market_share" -> sql(q8),
     "q9_profit" -> sql(q9))
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q7_nation_volume" -> q7,
     "q8_market_share" -> q8,
     "q9_profit" -> q9)

@@ -9,7 +9,7 @@ import Q._
   * shipdate/nationkey in place of the absent receiptdate/phone columns.
   * Same SQL text goes to both engines (Spark and the DuckDB oracle).
   */
-object QTpch4 {
+object QTpch4 extends Batch {
 
   private def sql(q: String): QueryFn = { (s, dir) =>
     graft.Tables.registerAll(s, dir)
@@ -152,5 +152,5 @@ object QTpch4 {
     "q22_sales_opportunity" -> q22)
 
   val queries: Map[String, QueryFn] = all.map { case (n, q) => n -> sql(q) }
-  val oracleSql: Map[String, String] = all
+  override val oracleSql: Map[String, String] = all
 }

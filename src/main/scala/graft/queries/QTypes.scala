@@ -12,7 +12,7 @@ import Q._
   * each exercising comparisons, arithmetic, and the family's special
   * operators, oracle-checked against DuckDB.
   */
-object QTypes {
+object QTypes extends Batch {
 
   val queries: Map[String, QueryFn] = Map(
     // integer family incl. cross-width (INT32 vs INT64) comparisons and
@@ -196,7 +196,7 @@ object QTypes {
         .orderBy("o_orderkey")
     })
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_ops_int" ->
       """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         |  l_linenumber + l_orderkey AS xw_add,

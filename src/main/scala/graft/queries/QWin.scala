@@ -18,7 +18,7 @@ import Q._
   * only allowed under tie-stable functions (rank/dense_rank/percent_rank/
   * cume_dist).
   */
-object QWin {
+object QWin extends Batch {
 
   private def li(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem").filter(col("l_orderkey") % 11 === 0)
@@ -182,7 +182,7 @@ object QWin {
 
   private val where = "WHERE l_orderkey % 11 = 0"
 
-  val oracleSql: Map[String, String] = Map(
+  override val oracleSql: Map[String, String] = Map(
     "q_win_rank" ->
       s"""SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
          |  rank() OVER w AS rnk,

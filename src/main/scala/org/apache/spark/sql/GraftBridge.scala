@@ -51,4 +51,10 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every posted scheduler event has reached its listeners
+    * (the listener bus is private[spark]), so totals a SparkListener
+    * keeps are complete for the jobs that ran so far. */
+  def awaitListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -31,6 +31,13 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Bpe.trainFromCounts(Seq(("ab", 1L)), 10).size <= 2)
   }
 
+  test("the q_text_bpe merge list is what training on sf0.01 yields") {
+    // provenance of the hardcoded tokenizer artifact: re-train it with
+    // the arguments it was trained with and compare the whole list
+    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
+    assert(Bpe.train(docs, "text", 32, 10000) == queries.QPipe.bpeMerges)
+  }
+
   test("encode applies merges in order with exact word boundaries") {
     import spark.implicits._
     val merges = Seq(("l", "o"), ("lo", "w"), ("e", "r"))
